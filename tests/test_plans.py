@@ -7,9 +7,14 @@ is a scale bug (task brief: '.explain the plan and iterate').
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from widiff_spark import enrich, fixtures, relops
+
+# Catalyst-internal plan shapes: a Spark upgrade runs `pytest -m catalyst_pin`
+# first
+pytestmark = pytest.mark.catalyst_pin
 
 SF = "/root/testdata/sf0.001"
 

@@ -175,6 +175,7 @@ class TestStreaming:
         assert (out.n_revisions > 0).all()
 
 
+@pytest.mark.catalyst_pin
 class TestStreamChunkStaging:
     def test_one_sorted_file_per_chunk_with_monotone_mtimes(self, spark,
                                                            tmp_path):
@@ -213,6 +214,24 @@ class TestStreamChunkStaging:
             key = list(zip(pdf["timestamp"], pdf["revision_id"]))
             assert key == sorted(key)  # in-file event-time order
         assert seen_chunks == sorted(seen_chunks)  # mtime order == chunk order
+
+
+@pytest.mark.parametrize("bad", [None, ""])
+def test_stream_chunks_reject_null_or_empty_chunk(spark, tmp_path, bad):
+    """A null or empty chunk would stage as __HIVE_DEFAULT_PARTITION__, a
+    chunk sorting after every real one: rejected before any file exists."""
+    import os
+
+    rev = spark.createDataFrame(
+        [("Q1", "r0", 1, "2024-01-01T00:00:00Z", "2024-01"),
+         ("Q1", "r0", 2, "2024-01-02T00:00:00Z", bad)],
+        "path string, repo string, revision_id long, timestamp string, "
+        "chunk string")
+    out = str(tmp_path / "staged")
+    with pytest.raises(ValueError, match="chunk"):
+        streaming.write_revision_stream_chunks(rev, out, chunk_col="chunk")
+    assert not os.path.exists(out)
+    assert not os.path.exists(out + ".__stage__")
 
 
 class TestDocumentQualityStream:

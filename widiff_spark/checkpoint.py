@@ -27,7 +27,7 @@ import time
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from .materialize import N_ENTITY_BUCKETS, iceberg_catalog, iceberg_identifier
+from .materialize import entity_bucket, iceberg_catalog, iceberg_identifier
 
 CHECKPOINT_TABLE = "_checkpoints/highwater"
 # Iceberg side uses a plain identifier — the parquet path's '/' would make
@@ -53,22 +53,11 @@ def _iceberg_merge_sql(catalog: str, updates_view: str) -> str:
             f"WHEN NOT MATCHED THEN INSERT *")
 
 
-def bucket_col(n_buckets: int = N_ENTITY_BUCKETS):
+def bucket_col():
     """Bucket of a *docs* row — must equal materialize.with_entity_bucket's
-    xxhash64(repo, entity_id) so the checkpoint redo unit and the write
+    bucket of (repo, entity_id) so the checkpoint redo unit and the write
     partition coincide (entity_id = numeric part of the Q-path)."""
-    entity_id = F.substring("path", 2, 18).cast("long")
-    return F.pmod(F.xxhash64("repo", entity_id), F.lit(n_buckets)).cast("int")
-
-
-def _trust_bucket_column(docs: DataFrame, n_buckets: int) -> bool:
-    """A physical ``bucket`` column is only authoritative when it was
-    written by the bucket-partitioned staging layout, i.e. with the
-    default ``N_ENTITY_BUCKETS`` formula.  A caller asking for any other
-    count (or an input carrying a stale/unrelated ``bucket`` column)
-    must re-derive, or watermarks and bucket filters are silently wrong
-    (ADVICE r5)."""
-    return "bucket" in docs.columns and n_buckets == N_ENTITY_BUCKETS
+    return entity_bucket(F.substring("path", 2, 18).cast("long"))
 
 
 def read_checkpoints(spark: SparkSession, path: str) -> DataFrame:
@@ -92,18 +81,14 @@ def read_checkpoints(spark: SparkSession, path: str) -> DataFrame:
             return spark.createDataFrame([], schema=_SCHEMA)
 
 
-def input_watermarks(docs: DataFrame,
-                     n_buckets: int = N_ENTITY_BUCKETS) -> DataFrame:
+def input_watermarks(docs: DataFrame) -> DataFrame:
     """Per-bucket high-water mark of the *input* (lexicographic commit order
     = revision order, FIXTURES.md §1).  A physical ``bucket`` column (the
-    bucket-partitioned staging layout, streaming.py) is trusted only when
-    the caller asks for the default bucket count it was written with —
-    for any other ``n_buckets`` (or an unrelated column that happens to
-    be named ``bucket``) the marks would be silently wrong, so the bucket
-    is re-derived from (repo, path) instead."""
-    if not _trust_bucket_column(docs, n_buckets):
-        docs = docs.drop("bucket").withColumn("bucket",
-                                              bucket_col(n_buckets))
+    bucket-partitioned staging layout, streaming.py, writes it with
+    ``bucket_col``) is used as is; otherwise the bucket is derived from
+    (repo, path)."""
+    if "bucket" not in docs.columns:
+        docs = docs.withColumn("bucket", bucket_col())
     return (docs.filter(F.col("path").rlike(r"^Q\d+$"))
             .groupBy("bucket")
             .agg(F.max("commit").alias("input_max_commit"),
@@ -111,10 +96,10 @@ def input_watermarks(docs: DataFrame,
                  F.approx_count_distinct("path").alias("approx_pages")))
 
 
-def pending_buckets(docs: DataFrame, spark: SparkSession, path: str,
-                    n_buckets: int = N_ENTITY_BUCKETS) -> list[int]:
+def pending_buckets(docs: DataFrame, spark: SparkSession,
+                    path: str) -> list[int]:
     """Buckets whose input advanced past the recorded high-water mark."""
-    marks = input_watermarks(docs, n_buckets)
+    marks = input_watermarks(docs)
     ckpt = read_checkpoints(spark, path).select(
         "bucket", "max_commit",
         F.col("n_input_rows").alias("ckpt_rows"))
@@ -128,27 +113,22 @@ def pending_buckets(docs: DataFrame, spark: SparkSession, path: str,
     return sorted(r["bucket"] for r in rows)
 
 
-def filter_to_buckets(docs: DataFrame, buckets: list[int],
-                      n_buckets: int = N_ENTITY_BUCKETS) -> DataFrame:
+def filter_to_buckets(docs: DataFrame, buckets: list[int]) -> DataFrame:
     """Restrict the input to the pages of the given buckets.  When the
     input carries a physical ``bucket`` column (bucket-partitioned staging,
     streaming.py) the filter is a PARTITION-PRUNING predicate — the scan
     never lists or reads untouched buckets' files, so a month-old streaming
     staging area costs only its touched buckets per trigger.  Otherwise the
     bucket is derived from (repo, path) and the filter evaluates post-scan
-    (the hash can't prune).  As in ``input_watermarks``, the physical
-    column is only trusted at the default bucket count it was written
-    with — a non-default ``n_buckets`` re-derives."""
-    if _trust_bucket_column(docs, n_buckets):
+    (the hash can't prune)."""
+    if "bucket" in docs.columns:
         return docs.filter(F.col("bucket").isin(buckets))
-    return docs.filter(bucket_col(n_buckets).isin(buckets))
+    return docs.filter(bucket_col().isin(buckets))
 
 
-def lineage_from_unified(unified: DataFrame,
-                         n_buckets: int = N_ENTITY_BUCKETS) -> DataFrame:
+def lineage_from_unified(unified: DataFrame) -> DataFrame:
     """Per-bucket lineage metrics out of the diff output (one aggregation)."""
-    b = F.pmod(F.xxhash64("repo", "entity_id"), F.lit(n_buckets)).cast("int")
-    return (unified.withColumn("bucket", b)
+    return (unified.withColumn("bucket", entity_bucket())
             .groupBy("bucket")
             .agg(F.countDistinct("repo", "entity_id").alias("num_pages"),
                  F.count(F.when(F.col("table") == "revision", 1))
@@ -160,14 +140,13 @@ def lineage_from_unified(unified: DataFrame,
 
 def record(spark: SparkSession, path: str, docs: DataFrame,
            lineage: DataFrame, run_id: str,
-           n_buckets: int = N_ENTITY_BUCKETS,
            buckets: list[int] | None = None) -> None:
     """Upsert checkpoint rows: new marks win over old per bucket (MERGE INTO
     on an Iceberg catalog; read-modify-overwrite on plain parquet).
 
     ``buckets`` restricts the upsert to the buckets actually processed this
     run — untouched buckets keep their previous lineage rows."""
-    marks = input_watermarks(docs, n_buckets).select(
+    marks = input_watermarks(docs).select(
         "bucket", F.col("input_max_commit").alias("max_commit"),
         "n_input_rows")
     if buckets is not None:

@@ -14,7 +14,7 @@ Sequential-by-construction rules that force the per-page grouping:
     (page_parser.py:2066-2123) — W1's "kept revisions only" lag;
   * parent-pointer repair across deleted/skipped revisions (W2,
     page_parser.py:2002-2011, 2066-2073);
-  * the running P31/P279 type set replay (W3);
+  * the running P31 type set replay (W3);
   * last-non-empty label/alias/description backfill (W4);
   * revert tagging over the page's accumulated histories (J6, revert.py).
 
@@ -63,8 +63,8 @@ class PageDiffer:
 
         self.current_revision_redirect = False
         self.meta: dict = {}
-        self.entity_data = {"label": "", "alias": "", "description": "",
-                            "p31_types": {}, "p279_types": {}}
+        self.entity_data = {"label": "", "alias": "", "description": ""}
+        self.p31_types = TypeSet()
         self.stats = {k: 0 for k in _STATS_KEYS}
         self.stats.update({
             "entity_id": entity_id, "entity_label": "", "entity_types_31": "",
@@ -409,20 +409,16 @@ class PageDiffer:
                             route_to_value=(key == "language"))
 
     # ------------------------------------------------------------------ #
-    # type-set replay helpers (W3)
+    # type-set replay (W3): only the P31 set reaches the output
     # ------------------------------------------------------------------ #
 
     def _types_add(self, pid: str, sid, value) -> None:
         if pid == "P31":
-            self.entity_data["p31_types"][(sid, _hashable(value))] = value
-        if pid == "P279":
-            self.entity_data["p279_types"][(sid, _hashable(value))] = value
+            self.p31_types.add(sid, value)
 
     def _types_remove(self, pid: str, sid, value) -> None:
         if pid == "P31":
-            self.entity_data["p31_types"].pop((sid, _hashable(value)), None)
-        if pid == "P279":
-            self.entity_data["p279_types"].pop((sid, _hashable(value)), None)
+            self.p31_types.remove(sid, value)
 
     # ------------------------------------------------------------------ #
     # page-level diff branches (page_parser.py:1350-1953)
@@ -721,6 +717,59 @@ class PageDiffer:
     # page replay (page_parser.py:1956-2326)
     # ------------------------------------------------------------------ #
 
+    def diff_revision(self, rev: dict, digest: dict,
+                      previous: dict | None) -> bool:
+        """One parse-ok revision of the replay: stamp its meta (the emitters
+        read it) and diff ``digest`` against ``previous``.  ``rev`` carries
+        the PARSED_SCHEMA fields with username/user_id/comment ''-filled
+        (``_prep_revisions``)."""
+        username = rev["username"]
+        self.meta = {
+            "revision_id": rev["revision_id"],
+            "timestamp": rev["timestamp"],
+            "comment": rev["comment"],
+            "username": username,
+            "user_id": rev["user_id"],
+            # P6, page_parser.py:2020-2026
+            "user_type": ("bot" if "bot" in username.lower()
+                          else "anonymous" if username == "" else "human"),
+        }
+        return self.get_changes_from_revisions(digest, previous)
+
+    def store_revision(self, prev_revision_id: int, digest: dict) -> None:
+        """Revision row of the revision ``diff_revision`` last stamped, with
+        its user-type counter (page_parser.py:2066-2123)."""
+        meta = self.meta
+        user_type = meta["user_type"]
+        redirect = self.current_revision_redirect
+        self.revision_rows.append({
+            "prev_revision_id": prev_revision_id,
+            "revision_id": meta["revision_id"],
+            "entity_id": self.entity_id,
+            "timestamp": meta["timestamp"],
+            "user_id": meta["user_id"],
+            "username": meta["username"],
+            "user_type": user_type,
+            "comment": meta["comment"],
+            "redirect": redirect,
+            "q_id_redirect": digest.get("redirect_qid") if redirect else None,
+        })
+        if user_type == "bot":
+            self.stats["num_bot_edits"] += 1
+        elif user_type == "anonymous":
+            self.stats["num_anonymous_edits"] += 1
+        else:
+            self.stats["num_human_edits"] += 1
+        self.current_revision_redirect = False
+
+    def change_rows(self) -> dict[str, list[dict]]:
+        """This page's change-table rows, in emission order."""
+        return {"revision": self.revision_rows,
+                "value_change": self.value_rows,
+                "qualifier_change": self.qualifier_rows,
+                "reference_change": self.reference_rows,
+                "datatype_metadata_change": self.metadata_rows}
+
     def process_page(self, revisions: list[dict]) -> dict:
         """``revisions``: page rows sorted by commit, as plain dicts with the
         PARSED_SCHEMA fields (snapshot already json-decoded into 'digest')."""
@@ -729,64 +778,27 @@ class PageDiffer:
         last_stored_revision_id = -1
 
         for rev in revisions:
-            if rev["is_deleted"]:
-                # deleted revision: invisible except for parent repair
-                # (page_parser.py:1993-2011, 2125-2126)
-                continue
-
-            user_type = ("bot" if "bot" in rev["username"].lower()
-                         else "anonymous" if rev["username"] == ""
-                         else "human")  # P6, page_parser.py:2020-2026
-            self.meta = {
-                "revision_id": rev["revision_id"],
-                "timestamp": rev["timestamp"],
-                "comment": rev["comment"],
-                "username": rev["username"],
-                "user_id": rev["user_id"],
-                "user_type": user_type,
-            }
-
+            # deleted revision: invisible except for parent repair
+            # (page_parser.py:1993-2011, 2125-2126); quarantined revision
+            # (page_parser.py:2045-2047): no change
             digest = rev["digest"]
-            if digest is None:
-                change = False  # quarantined revision (page_parser.py:2045-2047)
-            else:
-                # last-non-empty label/alias/description (W4,
-                # page_parser.py:2049-2058)
-                if digest["label"]:
-                    self.entity_data["label"] = digest["label"]
-                if digest["description"]:
-                    self.entity_data["description"] = digest["description"]
-                if digest["alias"]:
-                    self.entity_data["alias"] = digest["alias"]
-                change = self.get_changes_from_revisions(digest, previous)
-                self.stats["num_revisions_timed"] += 1
-
-            if change:
+            if rev["is_deleted"] or digest is None:
+                continue
+            # last-non-empty label/alias/description (W4,
+            # page_parser.py:2049-2058)
+            if digest["label"]:
+                self.entity_data["label"] = digest["label"]
+            if digest["description"]:
+                self.entity_data["description"] = digest["description"]
+            if digest["alias"]:
+                self.entity_data["alias"] = digest["alias"]
+            self.stats["num_revisions_timed"] += 1
+            if self.diff_revision(rev, digest, previous):
                 # stored prev pointer = last *stored* revision (W2;
                 # page_parser.py:2066-2073 + 2117 make the XML parentid moot)
-                self.revision_rows.append({
-                    "prev_revision_id": last_stored_revision_id,
-                    "revision_id": rev["revision_id"],
-                    "entity_id": self.entity_id,
-                    "timestamp": rev["timestamp"],
-                    "user_id": rev["user_id"],
-                    "username": rev["username"],
-                    "user_type": user_type,
-                    "comment": rev["comment"],
-                    "redirect": self.current_revision_redirect,
-                    "q_id_redirect": (digest or {}).get("redirect_qid")
-                                     if self.current_revision_redirect else None,
-                })
-                if user_type == "bot":
-                    self.stats["num_bot_edits"] += 1
-                elif user_type == "anonymous":
-                    self.stats["num_anonymous_edits"] += 1
-                else:
-                    self.stats["num_human_edits"] += 1
-                self.current_revision_redirect = False
+                self.store_revision(last_stored_revision_id, digest)
                 last_stored_revision_id = rev["revision_id"]
-                if digest is not None:
-                    previous = digest
+                previous = digest
 
         diff_sec = time.time() - t0
 
@@ -804,11 +816,7 @@ class PageDiffer:
         self.stats["num_reference_changes"] = len(self.reference_rows)
         self.stats["entity_label"] = (self.entity_data["label"]
                                       or self.entity_data["alias"])
-        # de-duplicated last P31 type values, insertion order (the reference
-        # joins a set — hash-randomized; we pick a deterministic winner)
-        type_ids = list(dict.fromkeys(
-            _hashable(t) for t in self.entity_data["p31_types"].values()))
-        self.stats["entity_types_31"] = ", ".join(str(t) for t in type_ids)
+        self.stats["entity_types_31"] = self.p31_types.render()
         if self.revision_rows:
             self.stats["first_revision_timestamp"] = self.revision_rows[0]["timestamp"]
             self.stats["last_revision_timestamp"] = self.revision_rows[-1]["timestamp"]
@@ -816,21 +824,30 @@ class PageDiffer:
         self.stats["total_process_time_sec"] = time.time() - t0
         self.stats["total_rev_edit_time_sec"] = time.time() - t1
 
-        entity_label = self.stats["entity_label"]
-        return {
-            "revision": self.revision_rows,
-            "value_change": self.value_rows,
-            "qualifier_change": self.qualifier_rows,
-            "reference_change": self.reference_rows,
-            "datatype_metadata_change": self.metadata_rows,
-            "entity_stats": self.stats,
-            "entity_label": entity_label,
-        }
+        return {**self.change_rows(), "entity_stats": self.stats,
+                "entity_label": self.stats["entity_label"]}
 
 
 def _hashable(value):
     return json.dumps(value, sort_keys=True) if isinstance(value, (dict, list)) \
         else value
+
+
+class TypeSet(dict):
+    """A page's running statement-type set (W3): (statement id, value) ->
+    value, in insertion order."""
+
+    def add(self, sid, value) -> None:
+        self[(sid, _hashable(value))] = value
+
+    def remove(self, sid, value) -> None:
+        self.pop((sid, _hashable(value)), None)
+
+    def render(self) -> str:
+        """De-duplicated type values in insertion order (the reference joins
+        a set — hash-randomized; we pick a deterministic winner)."""
+        return ", ".join(str(t) for t in dict.fromkeys(
+            _hashable(t) for t in self.values()))
 
 
 # ---------------------------------------------------------------------------
@@ -842,23 +859,25 @@ _ROW_TABLES = ["revision", "value_change", "qualifier_change",
                "reference_change", "datatype_metadata_change"]
 
 
-def _emit_page(out_cols: dict, repo: str, result: dict) -> None:
-    """Append one page's rows into the bucket's columnar accumulators.
+def _emit_rows(out_cols: dict, repo: str, entity_label,
+               tables: dict[str, list[dict]]) -> int:
+    """Append one page's (or one revision pair's) change rows into columnar
+    accumulators; returns the number of rows appended.
 
     Columnar: every row of one table shares the same key set (the save_*
     emitters build them from fixed literals), so each (table, column) pair
     extends its accumulator with ONE list comprehension instead of a
     per-row dict copy + full-width column loop (the old per-row ``emit``
     was ~15% of the whole diff stage in profiling; output rows outnumber
-    revisions ~8x).  Emission order per page — revision, value_change,
-    qualifier, reference, metadata, stats — is unchanged."""
-    entity_label = result["entity_label"]
-
+    revisions ~8x).  Emission order — revision, value_change, qualifier,
+    reference, metadata — is fixed."""
+    total = 0
     for table in _ROW_TABLES:
-        rows = result[table]
+        rows = tables[table]
         if not rows:
             continue
         n = len(rows)
+        total += n
         keys = rows[0].keys()
         for c, acc in out_cols.items():
             if c == "table":
@@ -871,7 +890,13 @@ def _emit_page(out_cols: dict, repo: str, result: dict) -> None:
                 acc.extend([r[c] for r in rows])
             else:
                 acc.extend([None] * n)
+    return total
 
+
+def _emit_page(out_cols: dict, repo: str, result: dict) -> None:
+    """One page's change rows, then its entity_stats row."""
+    entity_label = result["entity_label"]
+    _emit_rows(out_cols, repo, entity_label, result)
     stats = dict(result["entity_stats"])
     u = dict(_DEFAULT_ROW)
     u.update(table="entity_stats", repo=repo, entity_label=entity_label,
@@ -890,15 +915,6 @@ def _prep_revisions(records: list[dict]) -> list[dict]:
         rec["comment"] = rec["comment"] or ""
         rec["user_id"] = rec["user_id"] or ""
     return records
-
-
-def diff_page_frame(pdf: pd.DataFrame, repo: str, entity_id: int,
-                    config: PipelineConfig) -> dict:
-    """One page's revisions (already filtered) -> PageDiffer result."""
-    pdf = pdf.sort_values("commit", kind="mergesort")
-    revisions = _prep_revisions(pdf.to_dict("records"))
-    differ = PageDiffer(repo, entity_id, config)
-    return differ.process_page(revisions)
 
 
 def make_bucket_diff_udf(config: PipelineConfig = DEFAULT_CONFIG):

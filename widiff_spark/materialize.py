@@ -49,10 +49,15 @@ def dedup_by_pk(df: DataFrame, pk: list[str]) -> DataFrame:
             .filter(F.col("__rn") == 1).drop("__rn"))
 
 
-def with_entity_bucket(df: DataFrame, n_buckets: int = N_ENTITY_BUCKETS) -> DataFrame:
-    return df.withColumn(
-        "entity_bucket", F.pmod(F.xxhash64("repo", "entity_id"),
-                                F.lit(n_buckets)).cast("int"))
+def entity_bucket(entity_id="entity_id"):
+    """bucket(entity_id) of a page row: the write partition here and the
+    checkpoint redo unit (checkpoint.bucket_col)."""
+    return F.pmod(F.xxhash64(F.col("repo"), entity_id),
+                  F.lit(N_ENTITY_BUCKETS)).cast("int")
+
+
+def with_entity_bucket(df: DataFrame) -> DataFrame:
+    return df.withColumn("entity_bucket", entity_bucket())
 
 
 def iceberg_catalog(spark: SparkSession) -> str | None:
@@ -157,9 +162,3 @@ def read_table(spark: SparkSession, path: str, table: str) -> DataFrame:
     if catalog is not None:
         return spark.read.table(iceberg_identifier(catalog, table))
     return spark.read.parquet(f"{path}/{table}")
-
-
-def materialize_all(tables: dict[str, DataFrame], path: str) -> dict[str, str]:
-    """Write every pipeline table; returns {table: actual location}."""
-    return {name: write_table(df, path, name)
-            for name, df in tables.items()}

@@ -74,9 +74,12 @@ class PipelineResult:
     tables: dict[str, DataFrame] = field(default_factory=dict)
     mode: str = "grouped"          # execution mode actually chosen
     max_page_revisions: int = 0    # the auto probe's measurement (0 = not probed)
+    persisted: list[DataFrame] = field(default_factory=list)
 
     def unpersist(self):
-        self.unified.unpersist()
+        """Release every frame ``run_pipeline`` persisted."""
+        for df in self.persisted:
+            df.unpersist()
 
 
 # mode='auto' flips to the salted (pair-parallel) diff when any single page
@@ -140,13 +143,15 @@ def run_pipeline(spark: SparkSession, docs: DataFrame,
         else fixtures.cohort_types_df(spark, "scholarly")
 
     parsed = parse.parse_documents(docs)
+    persisted: list[DataFrame] = []
     if mode == "salted":
         from . import salted
-        unified = salted.extract_changes_salted(parsed, config)
+        unified, persisted = salted.salted_changes(parsed, config)
     else:
         unified = diff.extract_changes(parsed, config)
     if persist:
         unified = unified.persist(StorageLevel.MEMORY_AND_DISK)
+        persisted.append(unified)
 
     tables: dict[str, DataFrame] = {}
 
@@ -185,7 +190,8 @@ def run_pipeline(spark: SparkSession, docs: DataFrame,
             tables[fname] = fdf
 
     return PipelineResult(unified=unified, tables=tables, mode=mode,
-                          max_page_revisions=max_page_revisions)
+                          max_page_revisions=max_page_revisions,
+                          persisted=persisted)
 
 
 def run_incremental(spark: SparkSession, docs: DataFrame, output_path: str,

@@ -6,25 +6,32 @@ reference's own sandbox-entity skew, general_analysis.py:367-369) pins a
 single core for the whole replay.  This module removes that bound: the page
 replay decomposes into
 
-  1. KEEP decision (row-parallel window):  a revision advances the diff
-     predecessor iff it is the page's first parse-ok revision, a redirect, a
-     cleaned (fully emptied) revision, or its *comparable projection* differs
-     from the previous candidate's.  The projection — (label, description,
-     claims as {pid: {sid: [value_hash, rank, qualifier-hash-sets,
-     reference-key-sets]}}) — captures EXACTLY the reference's ``changed``
-     predicate (page_parser.py:1890-1953): every setter of ``changed`` reads
-     only projected fields, and projection equality is transitive, so
-     lag-dedup against the previous *candidate* equals dedup against the
-     previous *kept* revision.
-  2. PAIR construction (one window shuffle): lag(snapshot) over kept
-     revisions per page — each output row carries (prev, curr).
-  3. PAIR DIFF (mapInPandas, row-parallel — the skew killer): the same
-     PageDiffer branch dispatch per pair; a 60k-revision page becomes 60k
-     independent rows spread over the cluster.
-  4. REVERT TAGGING (applyInPandas over (page, property, value) — far finer
-     than pages): the unmodified revert.tag_reverted_edits per group.
-  5. ENTITY STATS (per-page aggregation + a tiny P31-replay UDF over only
-     the P31 statement rows).
+  1. ANNOTATE (``annotate_parsed``, mapInPandas, row-parallel): each parsed
+     revision's comparable-projection hash, its redirect / cleaned /
+     alias-only flags and its W4 label and alias.
+  2. KEEP + PAIR (``kept_pairs``, one page window):  a revision advances
+     the diff predecessor iff it is the page's first parse-ok revision, a
+     redirect, a cleaned (fully emptied) revision, or its *comparable
+     projection* differs from the previous candidate's.  The projection —
+     (label, description, claims as {pid: {sid: [value_hash, rank,
+     qualifier-hash-sets, reference-key-sets]}}) — captures EXACTLY the
+     reference's ``changed`` predicate (page_parser.py:1890-1953): every
+     setter of ``changed`` reads only projected fields, and projection
+     equality is transitive, so lag-dedup against the previous *candidate*
+     equals dedup against the previous *kept* revision.  lag(snapshot) over
+     the kept revisions then gives each row its (prev, curr) pair.
+  3. PAIR DIFF (``make_pair_diff_udf``, mapInPandas, row-parallel — the
+     skew killer): ``PageDiffer.diff_revision``/``store_revision`` per
+     pair, rows written by the grouped mode's columnar writer; a
+     60k-revision page becomes 60k independent rows spread over the cluster.
+  4. REVERT TAGGING (``_tag_udf``, applyInPandas over (page, property,
+     value) — far finer than pages): the unmodified
+     revert.tag_reverted_edits per group.
+  5. ENTITY STATS (``_entity_stats``): one page aggregation over the
+     pair-diff rows (counters), one over the annotated stream (page set, W4
+     label, timed revisions), the revert-stat rows of stage 4 and a P31
+     type-set replay (``_p31_replay_udf``) over only the P31 statement
+     rows; the payload JSON is built in the JVM.
 
 Output is row-identical to the grouped mode (tests/test_salted_parity.py
 proves equality on the edge-case corpus incl. the hot page and on the
@@ -45,7 +52,6 @@ salted's critical path is the window-bounded tag scan only.  Round 4:
 and flips to this mode above WIDIFF_SKEW_THRESHOLD (default 40k — the
 measured local[32] crossover; BENCH/BASELINE.md round-4 section).
 """
-
 from __future__ import annotations
 
 import hashlib
@@ -53,17 +59,14 @@ import json
 from typing import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import DataFrame, Window, functions as F, types as T
 
+from . import canonical as C
 from .config import DEFAULT_CONFIG, PipelineConfig
-from .diff import PageDiffer, _UNIFIED_COLUMNS, _hashable
+from .diff import (PageDiffer, TypeSet, _UNIFIED_COLUMNS, _emit_rows,
+                   _prep_revisions)
 from .revert import tag_reverted_edits
 from .schema import ENTITY_STATS_SCHEMA, UNIFIED_SCHEMA
-
-_STATS_KEYS = [f.name for f in ENTITY_STATS_SCHEMA.fields]
-
-# internal pair-diff output = unified columns + replay-ordering carriers
-_PAIR_EXTRA = ["commit", "emit_idx"]
 
 
 def state_key(digest: dict | None) -> str | None:
@@ -139,66 +142,37 @@ def annotate_parsed(parsed: DataFrame) -> DataFrame:
 
 
 def kept_pairs(annotated: DataFrame) -> DataFrame:
-    """Candidate filter + keep decision + (prev, curr) pairing windows.
+    """Candidate filter + keep decision + (prev, curr) pairing, all over one
+    page window.
 
     The page's FIRST parse-ok revision takes the created-entity path before
     any branch dispatch (page_parser.py:1890-1893) — it is kept and becomes
     the predecessor even if alias/sitelink-only; only NON-first alias-only
     revisions are skipped (and they never advance the predecessor, so they
     leave the comparison chain entirely)."""
-    page = ["repo", "path"]
-    cand0 = annotated.filter(F.col("parse_ok") & (~F.col("is_deleted")))
-    w0 = Window.partitionBy(*page).orderBy("commit")
-    cand0 = cand0.withColumn("__rn", F.row_number().over(w0))
-    chain = cand0.filter((F.col("__rn") == 1) | (~F.col("is_alias_only")))
-    w_cand = Window.partitionBy(*page).orderBy("commit")
-    chain = chain.withColumn("__prev_key", F.lag("state_key").over(w_cand)) \
-                 .withColumn("__first", F.row_number().over(w_cand) == 1)
-    kept = chain.filter(F.col("__first") | F.col("is_redirect")
-                        | F.col("is_cleaned")
+    w = Window.partitionBy("repo", "path").orderBy("commit")
+    first = F.col("__rn") == 1
+    chain = (annotated.filter(F.col("parse_ok") & (~F.col("is_deleted")))
+             .withColumn("__rn", F.row_number().over(w))
+             .filter(first | (~F.col("is_alias_only")))
+             .withColumn("__prev_key", F.lag("state_key").over(w)))
+    kept = chain.filter(first | F.col("is_redirect") | F.col("is_cleaned")
                         | (F.col("state_key") != F.col("__prev_key")))
-    w_kept = Window.partitionBy(*page).orderBy("commit")
-    return (kept
-            .withColumn("prev_snapshot", F.lag("snapshot").over(w_kept))
-            .withColumn("prev_revision_id",
-                        F.coalesce(F.lag("revision_id").over(w_kept),
-                                   F.lit(-1)))
-            .withColumn("is_first", F.lag("revision_id").over(w_kept).isNull())
-            .drop("__prev_key", "__first", "__rn"))
+    prev_rid = F.lag("revision_id").over(w)
+    return kept.select(
+        *annotated.columns,
+        F.lag("snapshot").over(w).alias("prev_snapshot"),
+        F.coalesce(prev_rid, F.lit(-1)).alias("prev_revision_id"),
+        prev_rid.isNull().alias("is_first"))
 
 
-class _PairEmitter(PageDiffer):
-    """PageDiffer driven one (prev, curr) pair at a time."""
-
-    def diff_pair(self, rec: dict, config_prev: dict | None) -> None:
-        user_type = ("bot" if "bot" in (rec["username"] or "").lower()
-                     else "anonymous" if (rec["username"] or "") == ""
-                     else "human")
-        self.meta = {
-            "revision_id": rec["revision_id"],
-            "timestamp": rec["timestamp"],
-            "comment": rec["comment"] or "",
-            "username": rec["username"] or "",
-            "user_id": rec["user_id"] or "",
-            "user_type": user_type,
-        }
-        digest = json.loads(rec["snapshot"])
-        self.last_digest = digest
-        prev = None if rec["is_first"] else config_prev
-        self.get_changes_from_revisions(digest, prev)
-        self.revision_rows.append({
-            "prev_revision_id": rec["prev_revision_id"],
-            "revision_id": rec["revision_id"],
-            "entity_id": self.entity_id,
-            "timestamp": rec["timestamp"],
-            "user_id": rec["user_id"] or "",
-            "username": rec["username"] or "",
-            "user_type": user_type,
-            "comment": rec["comment"] or "",
-            "redirect": self.current_revision_redirect,
-            "q_id_redirect": digest.get("redirect_qid")
-                             if self.current_revision_redirect else None,
-        })
+# internal pair-diff output = unified columns + replay-ordering carriers.
+# StructType.add mutates in place — build a fresh struct, never touch the
+# shared UNIFIED_SCHEMA
+_PAIR_OUT_SCHEMA = T.StructType(
+    list(UNIFIED_SCHEMA.fields)
+    + [T.StructField("commit", T.StringType()),
+       T.StructField("emit_idx", T.IntegerType())])
 
 
 def make_pair_diff_udf(config: PipelineConfig = DEFAULT_CONFIG):
@@ -206,81 +180,52 @@ def make_pair_diff_udf(config: PipelineConfig = DEFAULT_CONFIG):
 
     Output = UNIFIED columns (entity_label left empty — stamped later from
     the page dim) + commit + emit_idx carriers for the downstream replay
-    ordering; value rows additionally carry comment/timestamp for the
-    revert-tagging stage.
+    ordering; value rows additionally carry comment for the revert-tagging
+    stage.
     """
-    default_row = {c: None for c in _UNIFIED_COLUMNS}
-    out_columns = _UNIFIED_COLUMNS + _PAIR_EXTRA
+    out_columns = [f.name for f in _PAIR_OUT_SCHEMA.fields]
 
     def pair_diff(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         # rows arrive page-partitioned and commit-ordered (the pair window's
         # own shuffle), so the previous row's decoded curr IS this row's
-        # prev: one json.loads per revision, like the grouped replay (a
+        # prev: one decode per revision, like the grouped replay (a
         # string-equality check guards page boundaries / reordered input)
         last_raw: str | None = None
         last_digest: dict | None = None
         for pdf in batches:
-            out: dict = {c: [] for c in out_columns}
-            for rec in pdf.to_dict("records"):
-                differ = _PairEmitter(rec["repo"], int(rec["entity_id"]),
-                                      config)
+            out: dict = {c: [] for c in _UNIFIED_COLUMNS}
+            commits: list = []
+            emit_idx: list = []
+            for rec in _prep_revisions(pdf.to_dict("records")):
                 raw_prev = rec["prev_snapshot"]
-                if raw_prev is None:
+                if rec["is_first"] or raw_prev is None:
                     prev = None
                 elif raw_prev == last_raw:
                     prev = last_digest
                 else:
-                    prev = json.loads(raw_prev)
-                differ.diff_pair(rec, prev)
-                last_raw = rec["snapshot"]
-                last_digest = differ.last_digest
-                emit_idx = 0
-
-                def emit(table: str, row: dict, with_comment: bool = False):
-                    nonlocal emit_idx
-                    u = dict(default_row)
-                    u["table"] = table
-                    u["repo"] = rec["repo"]
-                    for k, v in row.items():
-                        if k != "_key" and k in u:
-                            u[k] = v
-                    if with_comment:
-                        u["comment"] = rec["comment"] or ""
-                    for c in _UNIFIED_COLUMNS:
-                        out[c].append(u[c])
-                    out["commit"].append(rec["commit"])
-                    out["emit_idx"].append(emit_idx)
-                    emit_idx += 1
-
-                for row in differ.revision_rows:
-                    emit("revision", row)
+                    prev = C.fast_json_loads(raw_prev)
+                digest = rec["digest"]
+                differ = PageDiffer(rec["repo"], int(rec["entity_id"]),
+                                    config)
+                differ.diff_revision(rec, digest, prev)
+                # kept revisions always store (the keep decision already
+                # saw the change)
+                differ.store_revision(rec["prev_revision_id"], digest)
                 for row in differ.value_rows:
-                    emit("value_change", row, with_comment=True)
-                for row in differ.qualifier_rows:
-                    emit("qualifier_change", row)
-                for row in differ.reference_rows:
-                    emit("reference_change", row)
-                for row in differ.metadata_rows:
-                    emit("datatype_metadata_change", row)
+                    row["comment"] = rec["comment"]
+                n = _emit_rows(out, rec["repo"], None, differ.change_rows())
+                commits.extend([rec["commit"]] * n)
+                emit_idx.extend(range(n))
+                last_raw, last_digest = rec["snapshot"], digest
+            out["commit"] = commits
+            out["emit_idx"] = emit_idx
             yield pd.DataFrame(out, columns=out_columns)
     return pair_diff
-
-
-# StructType.add mutates in place — build a fresh struct, never touch the
-# shared UNIFIED_SCHEMA
-from pyspark.sql import types as _T  # noqa: E402
-
-_PAIR_OUT_SCHEMA = _T.StructType(
-    list(UNIFIED_SCHEMA.fields)
-    + [_T.StructField("commit", _T.StringType()),
-       _T.StructField("emit_idx", _T.IntegerType())])
 
 
 def _tag_udf(config: PipelineConfig):
     """Revert tagging per (repo, entity_id, property_id, value_id) group —
     the unmodified sequential scan, on a key far finer than pages."""
-    flag_cols = ["is_reverted", "reversion", "reversion_timestamp",
-                 "revision_id_reversion"]
 
     def tag(key, pdf: pd.DataFrame) -> pd.DataFrame:
         changes_by_pv = {}
@@ -337,6 +282,10 @@ _TAG_SCHEMA = ("revision_id long, property_id int, value_id string, "
                "reversion_timestamp string, revision_id_reversion long, "
                "repo string, entity_id long, stats_json string")
 
+_REVERT_STATS = ("num_reverted_edits", "num_reversions",
+                 "num_reverted_edits_create", "num_reverted_edits_delete",
+                 "num_reverted_edits_update")
+
 
 def _p31_replay_udf():
     """entity_types_31 per page: the running (sid, value) type-set replay
@@ -344,38 +293,139 @@ def _p31_replay_udf():
     every _types_add/_types_remove in the reference coincides with an
     emitted P31 row (diff.py call sites), so the row stream is a complete
     event log of the type set."""
+    def stored(ser):  # inverse of canonical.serialize_or_empty
+        return None if ser == "{}" else json.loads(ser)
+
     def replay(key, pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values(["commit", "emit_idx"], kind="mergesort")
-        types: dict = {}
+        types = TypeSet()
         for rec in pdf.to_dict("records"):
-            sid = rec["value_id"]
-
-            def parse(ser):
-                if ser == "{}":
-                    return None
-                return json.loads(ser)
-            if rec["action"] == "CREATE":
-                v = parse(rec["new_value"])
-                types[(sid, _hashable(v))] = v
-            elif rec["action"] == "DELETE":
-                v = parse(rec["old_value"])
-                types.pop((sid, _hashable(v)), None)
-            elif rec["action"] == "UPDATE":
-                ov, nv = parse(rec["old_value"]), parse(rec["new_value"])
-                types.pop((sid, _hashable(ov)), None)
-                types[(sid, _hashable(nv))] = nv
-        type_ids = list(dict.fromkeys(_hashable(t) for t in types.values()))
-        return pd.DataFrame([{
-            "repo": key[0], "entity_id": key[1],
-            "entity_types_31": ", ".join(str(t) for t in type_ids)}])
+            action = rec["action"]
+            if action in ("DELETE", "UPDATE"):
+                types.remove(rec["value_id"], stored(rec["old_value"]))
+            if action in ("CREATE", "UPDATE"):
+                types.add(rec["value_id"], stored(rec["new_value"]))
+        return pd.DataFrame([{"repo": key[0], "entity_id": key[1],
+                              "entity_types_31": types.render()}])
     return replay
 
 
-def extract_changes_salted(parsed: DataFrame,
-                           config: PipelineConfig = DEFAULT_CONFIG
-                           ) -> DataFrame:
-    """Salted (pair-parallel) analog of diff.extract_changes: identical
-    unified output stream, no per-page sequential stage on the hot path."""
+def _stat_counters() -> list[tuple[str, str, dict]]:
+    """(entity_stats counter, table, {column: value}) for every counter the
+    pair-diff rows carry — what the grouped replay counts at emit time."""
+    counters = [("num_revisions", "revision", {}),
+                ("num_qualifier_changes", "qualifier_change", {}),
+                ("num_reference_changes", "reference_change", {})]
+    counters += [(f"num_{u}_edits", "revision", {"user_type": u})
+                 for u in ("bot", "anonymous", "human")]
+    for table, where, total, per_action in (
+            ("value_change", {"change_target": ""}, "num_value_changes",
+             "num_value_change_{}s"),
+            ("value_change", {"change_target": "rank"}, "num_rank_changes",
+             "num_rank_{}s"),
+            ("datatype_metadata_change", {}, "num_datatype_metadata_changes",
+             "num_datatype_metadata_{}s")):
+        counters.append((total, table, where))
+        counters += [(per_action.format(a.lower()), table,
+                      {**where, "action": a})
+                     for a in ("CREATE", "DELETE", "UPDATE")]
+    return counters
+
+
+def _pages(annotated: DataFrame) -> DataFrame:
+    """Every page of the annotated stream with its W4 entity_label (last
+    non-empty label, else last non-empty alias) and timed-revision count."""
+    ok = F.col("parse_ok") & (~F.col("is_deleted"))
+
+    def last_nonempty(c):
+        return F.max(F.when(ok & (F.col(c) != ""),
+                            F.struct("commit", c)))[c]
+    return annotated.groupBy("repo", "entity_id").agg(
+        F.count(F.when(ok, 1)).alias("num_revisions_timed"),
+        F.coalesce(last_nonempty("w4_label"), last_nonempty("w4_alias"),
+                   F.lit("")).alias("entity_label"))
+
+
+def _entity_stats(pages: DataFrame, diffed: DataFrame,
+                  tagged: DataFrame) -> DataFrame:
+    """(repo, entity_id, entity_label, payload) per page — every page gets a
+    row, even with zero kept revisions (grouped mode instantiates a
+    PageDiffer per page unconditionally)."""
+    page = ["repo", "entity_id"]
+    col = {c: F.col(c) for c in ("table", "change_target", "action",
+                                 "user_type")}
+    is_rev = col["table"] == "revision"
+    counts = []
+    for name, table, where in _stat_counters():
+        cond = col["table"] == table
+        for c, v in where.items():
+            cond = cond & (col[c] == v)
+        counts.append(F.count(F.when(cond, 1)).alias(name))
+    diff_counts = diffed.groupBy(*page).agg(
+        *counts,
+        F.min_by(F.when(is_rev, F.col("timestamp")),
+                 F.when(is_rev, F.col("commit")))
+        .alias("first_revision_timestamp"),
+        F.max_by(F.when(is_rev, F.col("timestamp")),
+                 F.when(is_rev, F.col("commit")))
+        .alias("last_revision_timestamp"))
+
+    revert_stats = (tagged.filter(F.col("stats_json").isNotNull())
+                    .select(*page, F.from_json(
+                        "stats_json",
+                        ", ".join(f"{c} int" for c in _REVERT_STATS))
+                        .alias("s"))
+                    .groupBy(*page)
+                    .agg(*[F.sum(f"s.{c}").alias(c) for c in _REVERT_STATS]))
+
+    p31 = (diffed.filter((F.col("table") == "value_change")
+                         & (F.col("property_id") == 31)
+                         & (F.col("change_target") == ""))
+           .select(*page, "value_id", "action", "old_value", "new_value",
+                   "commit", "emit_idx")
+           .groupBy(*page)
+           .applyInPandas(_p31_replay_udf(),
+                          schema="repo string, entity_id long, "
+                                 "entity_types_31 string"))
+
+    stats = (pages.join(diff_counts, page, "left")
+             .join(revert_stats, page, "left")
+             .join(p31, page, "left"))
+    # the grouped payload's keys and values, in ENTITY_STATS_SCHEMA order;
+    # the per-page timings are 0.0 here (there is no page loop to time)
+    given = {"file_path": F.col("repo"),
+             "entity_types_31": F.coalesce("entity_types_31", F.lit(""))}
+    as_is = {"entity_id", "entity_label", "first_revision_timestamp",
+             "last_revision_timestamp"}
+    counted = set(stats.columns)
+    fields = []
+    for f in ENTITY_STATS_SCHEMA.fields:
+        if f.name in given:
+            v = given[f.name]
+        elif f.name in as_is:
+            v = F.col(f.name)
+        elif f.name in counted:
+            v = F.coalesce(f.name, F.lit(0))
+        else:
+            v = F.lit(0)
+        fields.append(v.cast(f.dataType.simpleString()).alias(f.name))
+    return stats.select(*page, "entity_label", F.to_json(
+        F.struct(*fields), {"ignoreNullFields": "false"}).alias("payload"))
+
+
+def _to_unified(df: DataFrame) -> DataFrame:
+    """``df``'s columns in UNIFIED_SCHEMA order, typed nulls for the rest."""
+    have = set(df.columns)
+    return df.select(*[f.name if f.name in have
+                       else F.lit(None).cast(f.dataType.simpleString())
+                       .alias(f.name)
+                       for f in UNIFIED_SCHEMA.fields])
+
+
+def salted_changes(parsed: DataFrame, config: PipelineConfig = DEFAULT_CONFIG
+                   ) -> tuple[DataFrame, list[DataFrame]]:
+    """The salted unified stream and the intermediates it persists; the
+    caller unpersists those once the stream has been consumed."""
     spark = parsed.sparkSession
     annotated = annotate_parsed(parsed)
     pairs = kept_pairs(annotated)
@@ -389,8 +439,8 @@ def extract_changes_salted(parsed: DataFrame,
                   int(spark.conf.get("spark.sql.shuffle.partitions", "32")))
     diffed = pairs.select(
         "repo", "path", "commit", "entity_id", "revision_id", "timestamp",
-        "username", "user_id", "comment", "snapshot", "prev_snapshot",
-        "prev_revision_id", "is_first"
+        "username", "user_id", "comment", "parse_ok", "snapshot",
+        "prev_snapshot", "prev_revision_id", "is_first"
     ).repartitionByRange(n_parts, "repo", "path", "commit") \
      .mapInPandas(make_pair_diff_udf(config), schema=_PAIR_OUT_SCHEMA)
     diffed = diffed.persist()
@@ -405,24 +455,6 @@ def extract_changes_salted(parsed: DataFrame,
               .groupBy("repo", "entity_id", "property_id", "value_id")
               .applyInPandas(_tag_udf(config), schema=_TAG_SCHEMA))
     tagged = tagged.persist()
-    flags = tagged.filter(F.col("stats_json").isNull()) \
-        .select("revision_id", "property_id", "value_id", "change_target",
-                F.col("is_reverted").alias("__ir"),
-                F.col("reversion").alias("__rv"),
-                F.col("reversion_timestamp").alias("__rts"),
-                F.col("revision_id_reversion").alias("__rid"))
-    revert_stats = tagged.filter(F.col("stats_json").isNotNull()) \
-        .select("repo", "entity_id",
-                F.from_json("stats_json",
-                            "num_reverted_edits int, num_reversions int, "
-                            "num_reverted_edits_create int, "
-                            "num_reverted_edits_delete int, "
-                            "num_reverted_edits_update int").alias("s")) \
-        .groupBy("repo", "entity_id") \
-        .agg(*[F.sum(f"s.{c}").cast("int").alias(c) for c in
-               ("num_reverted_edits", "num_reversions",
-                "num_reverted_edits_create", "num_reverted_edits_delete",
-                "num_reverted_edits_update")])
 
     # the grouped replay PK-dedups value rows last-emission-wins
     # (revert.tag_reverted_edits dict_lookup) — duplicate statement ids make
@@ -430,163 +462,39 @@ def extract_changes_salted(parsed: DataFrame,
     # are keyed by PK so deduping after the join is equivalent.  Entity
     # stats stay PRE-dedup (the reference counts at save_change time).
     pk = ["revision_id", "property_id", "value_id", "change_target"]
+    flag_cols = ["is_reverted", "reversion", "reversion_timestamp",
+                 "revision_id_reversion"]
+    flags = tagged.filter(F.col("stats_json").isNull()) \
+        .select(*pk, *flag_cols)
     w_pk = Window.partitionBy(*pk).orderBy(F.desc("commit"),
                                            F.desc("emit_idx"))
-    value_tagged = (value_rows
+    value_tagged = (value_rows.drop(*flag_cols, "comment")
                     .withColumn("__pkr", F.row_number().over(w_pk))
-                    .filter(F.col("__pkr") == 1).drop("__pkr")
+                    .filter(F.col("__pkr") == 1)
                     .join(flags, pk, "left")
-                    .withColumn("is_reverted", F.coalesce("__ir", F.lit(0)))
-                    .withColumn("reversion", F.coalesce("__rv", F.lit(0)))
-                    .withColumn("reversion_timestamp", F.col("__rts"))
-                    .withColumn("revision_id_reversion", F.col("__rid"))
-                    .drop("__ir", "__rv", "__rts", "__rid")
-                    .withColumn("comment", F.lit(None).cast("string")))
+                    .fillna(0, ["is_reverted", "reversion"]))
 
-    # ---- per-page aggregates for entity_stats ----------------------------
-    page = ["repo", "entity_id"]
-    rev = diffed.filter(F.col("table") == "revision")
-    rev_agg = rev.groupBy(*page).agg(
-        F.count("*").cast("int").alias("num_revisions"),
-        F.min_by("timestamp", "commit").alias("first_revision_timestamp"),
-        F.max_by("timestamp", "commit").alias("last_revision_timestamp"),
-        F.sum(F.when(F.col("user_type") == "bot", 1).otherwise(0))
-        .cast("int").alias("num_bot_edits"),
-        F.sum(F.when(F.col("user_type") == "anonymous", 1).otherwise(0))
-        .cast("int").alias("num_anonymous_edits"),
-        F.sum(F.when(F.col("user_type") == "human", 1).otherwise(0))
-        .cast("int").alias("num_human_edits"))
-
-    def cnt(cond):
-        return F.sum(F.when(cond, 1).otherwise(0)).cast("int")
-
-    vc = value_rows
-    vc_agg = vc.groupBy(*page).agg(
-        cnt(F.col("change_target") == "").alias("num_value_changes"),
-        cnt((F.col("change_target") == "") & (F.col("action") == "CREATE"))
-        .alias("num_value_change_creates"),
-        cnt((F.col("change_target") == "") & (F.col("action") == "DELETE"))
-        .alias("num_value_change_deletes"),
-        cnt((F.col("change_target") == "") & (F.col("action") == "UPDATE"))
-        .alias("num_value_change_updates"),
-        cnt(F.col("change_target") == "rank").alias("num_rank_changes"),
-        cnt((F.col("change_target") == "rank") & (F.col("action") == "CREATE"))
-        .alias("num_rank_creates"),
-        cnt((F.col("change_target") == "rank") & (F.col("action") == "DELETE"))
-        .alias("num_rank_deletes"),
-        cnt((F.col("change_target") == "rank") & (F.col("action") == "UPDATE"))
-        .alias("num_rank_updates"))
-
-    other_agg = diffed.groupBy(*page).agg(
-        cnt(F.col("table") == "qualifier_change")
-        .alias("num_qualifier_changes"),
-        cnt(F.col("table") == "reference_change")
-        .alias("num_reference_changes"),
-        cnt(F.col("table") == "datatype_metadata_change")
-        .alias("num_datatype_metadata_changes"),
-        cnt((F.col("table") == "datatype_metadata_change")
-            & (F.col("action") == "CREATE"))
-        .alias("num_datatype_metadata_creates"),
-        cnt((F.col("table") == "datatype_metadata_change")
-            & (F.col("action") == "DELETE"))
-        .alias("num_datatype_metadata_deletes"),
-        cnt((F.col("table") == "datatype_metadata_change")
-            & (F.col("action") == "UPDATE"))
-        .alias("num_datatype_metadata_updates"))
-
-    # W4 + timed-revision count straight from the annotated parse stream
-    annotated_ok = annotated.filter(F.col("parse_ok") & (~F.col("is_deleted")))
-    w4 = annotated_ok.groupBy("repo", "entity_id").agg(
-        F.count("*").cast("int").alias("num_revisions_timed"),
-        F.max(F.when(F.col("w4_label") != "",
-                     F.struct("commit", "w4_label"))).alias("__l"),
-        F.max(F.when(F.col("w4_alias") != "",
-                     F.struct("commit", "w4_alias"))).alias("__a"))
-    w4 = w4.select("repo", "entity_id", "num_revisions_timed",
-                   F.coalesce(F.col("__l.w4_label"), F.lit(""))
-                   .alias("__label"),
-                   F.coalesce(F.col("__a.w4_alias"), F.lit(""))
-                   .alias("__alias"))
-
-    p31 = (vc.filter((F.col("property_id") == 31)
-                     & (F.col("change_target") == ""))
-           .select("repo", "entity_id", "value_id", "action", "old_value",
-                   "new_value", "commit", "emit_idx")
-           .groupBy("repo", "entity_id")
-           .applyInPandas(_p31_replay_udf(),
-                          schema="repo string, entity_id long, "
-                                 "entity_types_31 string"))
-
-    # every page gets a stats row, even with zero kept revisions (grouped
-    # mode instantiates a PageDiffer per page unconditionally)
-    pages = annotated.select("repo", "entity_id").distinct()
-    stats = (pages
-             .join(rev_agg, page, "left")
-             .join(vc_agg, page, "left")
-             .join(other_agg, page, "left")
-             .join(revert_stats, page, "left")
-             .join(w4, page, "left")
-             .join(p31, page, "left")
-             .fillna(0)
-             .fillna({"entity_types_31": "", "__label": "", "__alias": "",
-                      "first_revision_timestamp": "",
-                      "last_revision_timestamp": ""}))
-
-    def build_payload(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for rec in pdf.to_dict("records"):
-                s = {k: 0 for k in _STATS_KEYS}
-                for k in _STATS_KEYS:
-                    v = rec.get(k)
-                    if v is None or (not isinstance(v, str) and pd.isna(v)):
-                        continue
-                    if hasattr(v, "item"):  # numpy scalar -> python scalar
-                        v = v.item()
-                    s[k] = v
-                s["entity_id"] = int(rec["entity_id"])
-                s["entity_label"] = rec["__label"] or rec["__alias"]
-                s["file_path"] = rec["repo"]
-                s["first_revision_timestamp"] = \
-                    rec["first_revision_timestamp"] or None
-                s["last_revision_timestamp"] = \
-                    rec["last_revision_timestamp"] or None
-                for k in ("total_xml_parse_time_sec", "total_process_time_sec",
-                          "total_revision_diff_time_sec",
-                          "total_rev_edit_time_sec",
-                          "total_feature_creation_sec"):
-                    s[k] = 0.0
-                out.append({"repo": rec["repo"],
-                            "entity_id": int(rec["entity_id"]),
-                            "entity_label": s["entity_label"],
-                            "payload": json.dumps(s, ensure_ascii=False)})
-            yield pd.DataFrame(out, columns=["repo", "entity_id",
-                                             "entity_label", "payload"])
-
-    stats_rows = stats.mapInPandas(
-        build_payload,
-        schema="repo string, entity_id long, entity_label string, "
-               "payload string")
+    # persisted: the label stamp reads only entity_label, so column pruning
+    # would otherwise plan a second copy of the aggregation (and a third
+    # parse of every revision) instead of reusing this one
+    pages = _pages(annotated).persist()
+    stats = _entity_stats(pages, diffed, tagged)
 
     # ---- assemble the unified stream + stamp page entity_label -----------
-    label_dim = stats_rows.select("repo", "entity_id",
-                                  F.col("entity_label").alias("__el"))
-
-    def to_unified(df: DataFrame) -> DataFrame:
-        missing = [c for c in _UNIFIED_COLUMNS if c not in df.columns]
-        for c in missing:
-            df = df.withColumn(
-                c, F.lit(None).cast(dict(
-                    (f.name, f.dataType) for f in UNIFIED_SCHEMA.fields)[c]))
-        return df.select(*_UNIFIED_COLUMNS)
-
-    body = diffed.filter(F.col("table") != "value_change") \
-                 .drop("commit", "emit_idx") \
-                 .unionByName(to_unified(value_tagged.drop("commit",
-                                                           "emit_idx")))
-    body = (body.join(label_dim, page, "left")
+    label_dim = pages.select("repo", "entity_id",
+                             F.col("entity_label").alias("__el"))
+    body = (_to_unified(diffed.filter(F.col("table") != "value_change"))
+            .unionByName(_to_unified(value_tagged))
+            .join(label_dim, ["repo", "entity_id"], "left")
             .withColumn("entity_label", F.col("__el")).drop("__el"))
+    unified = body.unionByName(
+        _to_unified(stats.withColumn("table", F.lit("entity_stats"))))
+    return unified, [diffed, tagged, pages]
 
-    stats_unified = to_unified(
-        stats_rows.withColumn("table", F.lit("entity_stats")))
-    return body.unionByName(stats_unified)
+
+def extract_changes_salted(parsed: DataFrame,
+                           config: PipelineConfig = DEFAULT_CONFIG
+                           ) -> DataFrame:
+    """Salted (pair-parallel) analog of diff.extract_changes: identical
+    unified output stream, no per-page sequential stage on the hot path."""
+    return salted_changes(parsed, config)[0]

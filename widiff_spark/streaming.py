@@ -197,11 +197,19 @@ def write_revision_stream_chunks(rev: DataFrame, path: str,
     files, same order, same mtime contract.  ``chunk_col`` must be a
     STRING column whose lexicographic order is the intended arrival
     order (every in-repo caller uses zero-padded date strings); chunk
-    order is taken from the partition directory names.  Returns the
+    order is taken from the partition directory names.  A null or empty
+    chunk raises ``ValueError`` before anything is written: the
+    partitioned write would stage it as a ``__HIVE_DEFAULT_PARTITION__``
+    chunk that sorts after every real one.  Returns the
     number of chunks written."""
     import os
     import shutil
     from urllib.parse import unquote
+
+    chunk = F.col(chunk_col)
+    if not rev.filter(chunk.isNull() | (chunk == "")).isEmpty():
+        raise ValueError(f"write_revision_stream_chunks: null or empty "
+                         f"{chunk_col!r} values")
 
     stage = path.rstrip("/") + ".__stage__"
     part_key = "__chunk_part"
